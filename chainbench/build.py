@@ -64,8 +64,8 @@ def build(out):
     stamp_file.unlink(missing_ok=True)
     args_file = out / "scalac.args"
     args_file.write_text("\n".join(str(p) for p in srcs) + "\n")
-    cmd = [java(), "-Xss8m", "-Xmx2g", "-cp", f"{jars}/*", "scala.tools.nsc.Main",
-           "-usejavacp", "-nowarn", "-d", str(classes), f"@{args_file}"]
+    cmd = [java(), "-Xss8m", "-Xmx2g", "-XX:-UsePerfData", "-cp", f"{jars}/*",
+           "scala.tools.nsc.Main", "-usejavacp", "-nowarn", "-d", str(classes), f"@{args_file}"]
     print(f"chainbench: compiling {len(srcs)} sources", file=sys.stderr, flush=True)
     res = subprocess.run(cmd, stdout=sys.stderr, stderr=sys.stderr)
     if res.returncode != 0:

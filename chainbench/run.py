@@ -53,7 +53,9 @@ def main():
     cmd = [build.java()]
     for p in ADD_OPENS:
         cmd += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
-    cmd += [f"-Xmx{HEAP}", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
+    # no hsperfdata file in the system temp dir
+    cmd += [f"-Xmx{HEAP}", "-XX:-UsePerfData",
+            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
             f"-Djava.io.tmpdir={tmp}", f"-Dspark.local.dir={tmp}",
             "-cp", f"{classes}{os.pathsep}{build.spark_jars()}/*", "chainbench.Main",
             "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),

@@ -304,7 +304,7 @@ object Main {
   /** End-to-end metrics (trace 0) with their units. */
   val EndToEnd: Seq[(String, String)] = Seq(
     "setup_s" -> "s", "store_ready_s" -> "s", "ingest_batch_p50_s" -> "s",
-    "groom_s" -> "s", "train_s" -> "s", "model_refresh_s" -> "s",
+    "train_s" -> "s", "model_refresh_s" -> "s",
     "decisions_per_s" -> "1/s", "cpu_s" -> "s", "peak_heap_mb" -> "MB",
     "store_bytes_per_decision" -> "B")
 
@@ -364,6 +364,8 @@ object Main {
       info("warmup_s") = num((System.nanoTime() - w0) / 1e9)
       chain.deleteTree(work.resolve("warmup"))
       val setups = (1 to SetupRepeats).map { i =>
+        // each set-up starts from the same collected heap
+        System.gc()
         val t0 = System.nanoTime()
         val g = chain.prepare(work.resolve(s"setup$i"), wl.shape)
         if (i < SetupRepeats) chain.deleteTree(work.resolve(s"setup$i"))
@@ -397,6 +399,7 @@ object Main {
       info("iterations") = timed.length.toString
       info("store_ready_s") = timed.map(r => num(r.storeReadyS)).mkString("[", ",", "]")
       info("model_refresh_s") = timed.map(r => num(r.refreshS)).mkString("[", ",", "]")
+      info("groom_s") = timed.map(r => num(r.groomS)).mkString("[", ",", "]")
       info("holdout_rmse") = timed.map(r => num(r.rmse)).mkString("[", ",", "]")
 
       val metrics: Seq[(String, Double, String)] =
@@ -405,7 +408,6 @@ object Main {
             "setup_s" -> setupS,
             "store_ready_s" -> med(_.storeReadyS),
             "ingest_batch_p50_s" -> med(r => median(r.batchS)),
-            "groom_s" -> med(_.groomS),
             "train_s" -> med(_.trainS),
             "model_refresh_s" -> med(_.refreshS),
             "decisions_per_s" -> med(r => r.decisionsIngested / r.storeReadyS),

@@ -28,7 +28,7 @@ OUT = build.ROOT / ".bench_build"
 def generate(dest, workload, seed):
     classes = build.build(OUT)
     subprocess.run(
-        [build.java(), "-cp", f"{classes}{os.pathsep}{build.spark_jars()}/*",
+        [build.java(), "-XX:-UsePerfData", "-cp", f"{classes}{os.pathsep}{build.spark_jars()}/*",
          "chainbench.Gen", str(dest), workload, str(seed)],
         check=True, stdout=subprocess.DEVNULL)
     return {p.name: p.read_bytes() for p in sorted(Path(dest).iterdir())}
