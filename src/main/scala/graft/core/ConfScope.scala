@@ -12,8 +12,11 @@ import org.apache.spark.sql.SparkSession
   * driving the gate (the bench/verify harnesses run gates serially);
   * a body that ITSELF fans out driver threads (e.g. groom's concurrent
   * group compactions) is fine — inheriting the override is the point —
-  * but concurrent INDEPENDENT scopes need a cloned session
-  * (spark.newSession() inherits conf yet isolates set/unset).
+  * but concurrent INDEPENDENT scopes need their own session.
+  * spark.newSession() isolates set/unset, but its SQL conf starts
+  * from the SparkConf (launch/builder settings), NOT from the caller's
+  * runtime conf: overrides the caller set at runtime must be copied
+  * over explicitly.
   */
 private[graft] object ConfScope {
 

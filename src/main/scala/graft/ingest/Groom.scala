@@ -181,8 +181,7 @@ object Groom {
     peakCompactions.getAndAccumulate(active, math.max)
     try {
       compactionStartHook()
-      graft.train.Trainer.step(s"groom.group(${keys.length} keys)")(
-        compactGroupImpl(spark, baseDir, model, keys, maxRowsPerFile))
+      compactGroupImpl(spark, baseDir, model, keys, maxRowsPerFile)
     } finally activeCompactions.decrementAndGet()
   }
 
@@ -201,14 +200,13 @@ object Groom {
       element_at(orderMap, substring_index(input_file_name(), "/", -1)),
       raise_error(concat(lit("file "), input_file_name(),
         lit(" not in the group's key list"))).cast("int"))
-    val df = graft.train.Trainer.step("groom.read")(
-      PartitionStore.read(spark, baseDir, keys)
-        .withColumn(Merge.SrcOrder, pathOrder)
-        .withColumn(Schema.Model, lit(model)))
+    val df = PartitionStore.read(spark, baseDir, keys)
+      .withColumn(Merge.SrcOrder, pathOrder)
+      .withColumn(Schema.Model, lit(model))
     // No staging for the (bounded, ≤ a pair of groups × maxRowsPerFile)
     // group merge: the upstream is a deterministic scan of the group's
     // own few parquet files + one tiny merge agg, cheap to run once
-    // per write() pass. Memory staging serializes the concurrent
+    // per write() run. Memory staging serializes the concurrent
     // groups on the session-global CacheManager write lock (measured
     // r13: ~8.4 s/group at 12 concurrent); disk staging pays a
     // write+read round-trip per group that dominated each group's wall
@@ -216,11 +214,8 @@ object Groom {
     // Production grooming runs MORE groups at once, not fewer — both
     // convoys worsen with scale while the double-scan stays per-group
     // constant.
-    val written = graft.train.Trainer.step("groom.write")(
-      PartitionStore.write(Merge.merge(df), baseDir, model, maxRowsPerFile,
-        staging = PartitionStore.Staging.Recompute))
-    graft.train.Trainer.step("groom.delete")(
-      PartitionStore.delete(spark, baseDir, keys))
+    val written = PartitionStore.write(Merge.merge(df), baseDir, model, maxRowsPerFile)
+    PartitionStore.delete(spark, baseDir, keys)
     written
   }
 
@@ -259,43 +254,45 @@ object Groom {
       }
       previousKeys = shape
       iteration += 1
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(groups.size, maxConcurrentGroups)))
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        // Data-derived shuffle width for the group merges: a group is
-        // REFERENCE-BOUNDED (≤ 1000 keys and ≤ ~2 groups × 10k rows —
-        // the grouping caps above), so each compaction's merge/stage/
-        // chunk exchanges move at most ~20k rows no matter the corpus
-        // size — a session-wide width (e.g. 32) schedules 32 near-empty
-        // tasks per stage × 3 jobs × every concurrent group, and the
-        // scheduler convoy tripled each group's wall time (measured:
-        // group write 1.85 s concurrent vs 0.6 s alone; groom step
-        // 3.7 → see OPTIMIZATION_r14.md). The width is set once around
-        // the fan-out (session conf is global, the group threads
-        // inherit it — ConfScope single-thread contract holds: groom
-        // owns the session while it runs).
-        graft.core.ConfScope.withShufflePartitions(spark,
-          math.max(2, 2 * maxRowsPerFile / PartitionStore.MaxRowsPerFile)) {
-        val futures = groups.map(g => scala.concurrent.Future {
-          compactGroup(spark, baseDir, model, g, maxRowsPerFile)
-        })
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futures), scala.concurrent.duration.Duration.Inf)
-        }
-      } finally {
-        pool.shutdown()
-        // a fail-fast Await may leave sibling compactions mid-flight;
-        // returning while they still write/delete store files would
-        // race the caller's next listKeys/groom pass — and if even the
-        // drain WINDOW expires, the caller must not proceed as if the
-        // store were quiet
-        if (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)) {
-          pool.shutdownNow()
-          throw new IllegalStateException(
-            "groom: sibling compactions still running after the 1h drain " +
-              "window — store may be mid-mutation; do not trust the listing")
+      // Data-derived shuffle width for the group merges: a group is
+      // REFERENCE-BOUNDED (≤ 1000 keys and ≤ ~2 groups × 10k rows —
+      // the grouping caps above), so each compaction's merge/census/
+      // chunk exchanges move at most ~20k rows no matter the corpus
+      // size — a session-wide width (e.g. 32) schedules 32 near-empty
+      // tasks per stage × 3 jobs × every concurrent group, and the
+      // scheduler convoy tripled each group's wall time (measured:
+      // group write 1.85 s concurrent vs 0.6 s alone; groom step
+      // 3.7 → see OPTIMIZATION_r14.md). The width is set once around
+      // the fan-out (session conf is global, the group threads
+      // inherit it — ConfScope single-thread contract holds: groom
+      // owns the session while it runs). The scope encloses the pool's
+      // drain, so a fail-fast exit restores the caller's width only
+      // after every sibling compaction has stopped.
+      graft.core.ConfScope.withShufflePartitions(spark,
+        math.max(2, 2 * maxRowsPerFile / PartitionStore.MaxRowsPerFile)) {
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.max(1, math.min(groups.size, maxConcurrentGroups)))
+        try {
+          implicit val ec: scala.concurrent.ExecutionContext =
+            scala.concurrent.ExecutionContext.fromExecutor(pool)
+          val futures = groups.map(g => scala.concurrent.Future {
+            compactGroup(spark, baseDir, model, g, maxRowsPerFile)
+          })
+          scala.concurrent.Await.result(
+            scala.concurrent.Future.sequence(futures), scala.concurrent.duration.Duration.Inf)
+        } finally {
+          pool.shutdown()
+          // a fail-fast Await may leave sibling compactions mid-flight;
+          // returning while they still write/delete store files would
+          // race the caller's next listKeys/groom pass — and if even the
+          // drain WINDOW expires, the caller must not proceed as if the
+          // store were quiet
+          if (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)) {
+            pool.shutdownNow()
+            throw new IllegalStateException(
+              "groom: sibling compactions still running after the 1h drain " +
+                "window — store may be mid-mutation; do not trust the listing")
+          }
         }
       }
     }

@@ -155,13 +155,11 @@ object Merge {
       models.map { m =>
         // the staged slice lost the model column to the directory key;
         // PartitionStore.write drops it anyway, so no need to restore.
-        // Recompute: the slice is ALREADY cheap re-runnable columnar
-        // input (a pruned scan of the staging tree we just wrote), so
-        // neither a third disk copy nor a CacheManager persist buys
-        // anything — write()'s two passes each scan the pruned subtree
+        // The slice is cheap re-runnable columnar input (a pruned scan
+        // of the staging tree we just wrote): write()'s two runs each
+        // scan the pruned subtree
         m -> graft.ingest.PartitionStore.write(
-          spark.read.parquet(s"$stageDir/$Model=$m"), storeDir, m,
-          staging = graft.ingest.PartitionStore.Staging.Recompute)
+          spark.read.parquet(s"$stageDir/$Model=$m"), storeDir, m)
       }.toMap
     } finally { fs.delete(stagePath, true); () }
   }

@@ -48,80 +48,48 @@ object PartitionStore {
   private val MinPrefix = 6
   private val MaxPrefix = 15
 
-  /** How write() materializes its input for the two passes it makes
-    * (prefix-length census, then the chunked write).
-    */
-  sealed trait Staging
-  object Staging {
-    /** Stage to transient parquet and read back — the default, correct
-      * for EXPENSIVE upstreams (gzip JSONL parse + merge): the
-      * upstream runs exactly once and never has to fit in memory.
-      */
-    case object Disk extends Staging
-    /** Memory persist (spill-safe) — for small bounded batches where a
-      * disk round-trip costs more than it saves. Serializes on the
-      * session-global CacheManager write lock, so AVOID under
-      * concurrent writers (the groom lock convoy, r13).
-      */
-    case object Memory extends Staging
-    /** No staging: run the upstream once per pass. ONLY for upstreams
-      * that are already cheap re-runnable columnar scans (a staged
-      * parquet tree, a bounded groom group) AND deterministic — the
-      * census pass and the write pass must see identical rows. Removes
-      * the extra write+read round-trip and the CacheManager lock
-      * entirely; measured on the 12-concurrent-group groom fan-out,
-      * where the per-group disk stage was most of each group's wall
-      * time (OPTIMIZATION_r14.md).
-      */
-    case object Recompute extends Staging
-  }
-
   /** Write a merged rewarded-decision DataFrame for ONE model into the
     * store at `baseDir`; returns the written keys (relative to baseDir).
+    *
+    * `df` runs TWICE — once for the prefix-length census, once for the
+    * chunked write — so it must be a cheap, re-runnable, DETERMINISTIC
+    * input: a scan of already-materialized columnar files (the
+    * per-model staging tree of [[Merge.writePerModel]], the gates'
+    * merged cache) or a bounded groom group. A caller with an
+    * expensive upstream (gzip JSONL parse + merge) stages it once
+    * itself, as writePerModel does for all its models. Materializing
+    * here instead would cost every call a write+read round trip (most
+    * of a groom group's wall time, OPTIMIZATION_r14.md) or a persist
+    * that serializes concurrent groom groups on the session-global
+    * CacheManager lock (r13). The determinism assumption is CHECKED:
+    * the chunk footers must hold exactly the rows the census counted,
+    * or the write throws before the first file is published.
     */
   def write(df: DataFrame, baseDir: String, model: String,
-      maxRowsPerFile: Int = MaxRowsPerFile,
-      staging: Staging = Staging.Disk): Seq[String] = {
+      maxRowsPerFile: Int = MaxRowsPerFile): Seq[String] = {
     val spark = df.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(baseDir).getFileSystem(conf)
 
-    // Default (Disk) staging writes the batch to parquet ONCE: the
-    // upstream (typically gzip JSONL parse + merge — not prunable, not
-    // cheap) executes exactly one time, and both follow-up passes read
-    // the staged columnar files instead (the counts pass reads just
-    // the decision_id column). Disk staging instead of persist() means
-    // the batch never has to fit in executor memory — a 100× backfill
-    // costs 2× write I/O, not an OOM. LZ4 because the stage is
-    // transient: encode/decode speed is the cost that matters, not
-    // bytes on disk. See [[Staging]] for the Memory/Recompute modes.
-    val stageDir = s"$baseDir/_stage_${java.util.UUID.randomUUID()}"
     val tmpDir = s"$baseDir/_tmp_${java.util.UUID.randomUUID()}"
     // native codegen KSUID decode (limb arithmetic, no BigInteger/UDF);
     // throws on an invalid id exactly like PartitionFilename.timestampOf
     val withTs = df.drop(Schema.Model)
       .withColumn("_ts",
         graft.functions.KsuidExpressions.ksuidBasicIso(col(Schema.DecisionId)))
-    val staged = staging match {
-      case Staging.Disk =>
-        graft.train.Trainer.step("store.stage")(
-          withTs.write.option("compression", "lz4").parquet(stageDir))
-        spark.read.parquet(stageDir)
-      case Staging.Memory => withTs.persist()
-      case Staging.Recompute => withTs
-    }
-    // cleanup in finally: a failed write must not leak the staged
-    // batch copy / partial tmp output under baseDir (they live outside
-    // rewarded_decisions/, so nothing would ever reclaim them) nor the
-    // persisted partitions in the stageToDisk=false path
+    // cleanup in finally: a failed write must not leak the partial tmp
+    // output under baseDir (it lives outside rewarded_decisions/, so
+    // nothing would ever reclaim it)
     try {
 
     // Prefix-length choice: the coarsest resolution at which every
     // prefix group holds ≤ maxRowsPerFile rows. Per-second counts —
     // one row per distinct second — roll up over all candidate
     // lengths in one distributed agg, so exactly
-    // (MaxPrefix−MinPrefix+1) rows reach the driver.
-    val levelMax = graft.train.Trainer.step("store.levelMax")(staged
+    // (MaxPrefix−MinPrefix+1) rows reach the driver. Each length's
+    // groups partition the input, so any length's sum is the census
+    // row count the write is checked against below.
+    val census = withTs
       .select(substring(col("_ts"), 1, MaxPrefix).as("_p"))
       .groupBy("_p").count()
       .select(explode(array((MinPrefix to MaxPrefix).map(i =>
@@ -129,11 +97,12 @@ object PartitionStore {
         col("count"))
       .groupBy(col("lp.len").as("len"), col("lp.pfx"))
       .agg(sum("count").as("n"))
-      .groupBy("len").agg(max("n").as("maxN"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
+      .groupBy("len").agg(max("n").as("maxN"), sum("n").as("total"))
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
     val prefixLen = (MinPrefix to MaxPrefix)
-      .find(i => levelMax.getOrElse(i, 0L) <= maxRowsPerFile)
+      .find(i => census.get(i).forall(_._1 <= maxRowsPerFile))
       .getOrElse(MaxPrefix)
+    val censusRows = census.values.headOption.fold(0L)(_._2)
 
     // NOTE: deliberately no maxRecordsPerFile backstop. If >maxRows
     // rows share one SECOND (prefix length 15 still over the cap),
@@ -142,7 +111,7 @@ object PartitionStore {
     // the reference writes one oversized file in that case
     // (partition.py:375-405 splits only down to 1s resolution) and
     // so do we.
-    graft.train.Trainer.step("store.chunkWrite")(staged
+    withTs
       .withColumn("_chunk", substring(col("_ts"), 1, prefixLen))
       .drop("_ts")
       .repartition(col("_chunk"))
@@ -150,9 +119,8 @@ object PartitionStore {
       .write
       .partitionBy("_chunk")
       .option("compression", "zstd")
-      .parquet(tmpDir))
+      .parquet(tmpDir)
 
-    graft.train.Trainer.step("store.rename") {
     val written = listFiles(fs, new Path(tmpDir)).filter(_.getName.endsWith(".parquet"))
     // Footer reads and renames are independent metadata operations; a
     // pooled pass keeps the driver tail O(files / pool) instead of
@@ -161,33 +129,37 @@ object PartitionStore {
     // Hadoop FileSystem instances are thread-safe for these calls.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(written.size, RenamePoolSize)))
-    try {
-      written.map { file =>
-        pool.submit(new java.util.concurrent.Callable[String] {
-          override def call(): String = {
-            val (minId, maxId, rows) = footerStats(conf, file)
-            val key = PartitionFilename.key(model, minId, maxId, rows)
-            val dest = new Path(baseDir, key)
-            fs.mkdirs(dest.getParent)
-            if (!fs.rename(file, dest))
-              throw new java.io.IOException(s"rename $file -> $dest failed")
-            key
-          }
+    def pooled[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+      xs.map { x =>
+        pool.submit(new java.util.concurrent.Callable[B] {
+          override def call(): B = f(x)
         })
-      }.map { f =>
-        try f.get()
+      }.map { fut =>
+        try fut.get()
         catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
       }
-    } finally pool.shutdownNow()
-    }
-    } finally {
-      staging match {
-        case Staging.Disk => fs.delete(new Path(stageDir), true)
-        case Staging.Memory => staged.unpersist(blocking = false)
-        case Staging.Recompute => ()
+    try {
+      val stats = pooled(written)(footerStats(conf, _))
+      // every footer is read BEFORE the first rename: if the two runs
+      // of `df` disagreed (a nondeterministic upstream), the chunking
+      // was sized for rows the write never saw — fail with nothing
+      // published rather than silently store a different row set
+      val footerRows = stats.map(_._3).sum
+      if (footerRows != censusRows)
+        throw new IllegalStateException(
+          s"PartitionStore.write: the chunk files hold $footerRows rows but " +
+            s"the prefix census counted $censusRows — the input is not " +
+            "deterministic across write's two runs; stage it first")
+      pooled(written.zip(stats)) { case (file, (minId, maxId, rows)) =>
+        val key = PartitionFilename.key(model, minId, maxId, rows)
+        val dest = new Path(baseDir, key)
+        fs.mkdirs(dest.getParent)
+        if (!fs.rename(file, dest))
+          throw new java.io.IOException(s"rename $file -> $dest failed")
+        key
       }
-      fs.delete(new Path(tmpDir), true)
-    }
+    } finally pool.shutdownNow()
+    } finally fs.delete(new Path(tmpDir), true)
   }
 
   /** min/max decision_id + row count from the parquet footer only. */

@@ -87,8 +87,7 @@ object Basket {
     val it = items(df, basketCol, itemCol, maxBasketSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val nBaskets = graft.train.Trainer.step("basket.nBaskets")(
-        it.select(countDistinct(col("b"))).head().getLong(0))
+      val nBaskets = it.select(countDistinct(col("b"))).head().getLong(0)
       val sup = it.groupBy("i").agg(count(lit(1)).as("s"))
       val pairs = pairsOf(it, minSupport)
       val out = pairs
@@ -106,7 +105,7 @@ object Basket {
           (col("pair_sup") * nBaskets /
             (col("_sa") * col("_sb")).cast("double")).as("lift"))
       // consume `it` fully before releasing it
-      graft.train.Trainer.step("basket.rules")(Caching.handOff(out))
+      Caching.handOff(out)
     } finally { it.unpersist(blocking = false); () }
   }
 }

@@ -36,7 +36,7 @@ object GateArtifacts {
     * No real build holds a staging dir for an hour; a crashed one
     * holds it forever.
     */
-  private[graft] val StagingReapAgeMs: Long = 60L * 60 * 1000
+  private[graft] val StageDirReapAgeMs: Long = 60L * 60 * 1000
 
   /** Scratch root for gate-lifetime artifacts: RAM-backed when the
     * host offers it, same convention as the streaming replay dirs
@@ -103,7 +103,7 @@ object GateArtifacts {
     // rewrite had, minus the torn-interleaving. Orphans from CRASHED
     // builds (which never reach their own deleteTree) are reaped here
     // so retries start clean and /tmp stays flat — but ONLY staging
-    // dirs older than `StagingReapAgeMs`: a young staging sibling may
+    // dirs older than `StageDirReapAgeMs`: a young staging sibling may
     // belong to a LIVE concurrent builder, and deleting it would crash
     // that builder mid-write instead of letting rename order decide.
     val parent = java.nio.file.Paths.get(slot).getParent
@@ -112,7 +112,7 @@ object GateArtifacts {
       val siblings = java.nio.file.Files.list(parent)
       try siblings.filter { p =>
         p.getFileName.toString.startsWith(s"$name.staging-") &&
-          (try now - java.nio.file.Files.getLastModifiedTime(p).toMillis > StagingReapAgeMs
+          (try now - java.nio.file.Files.getLastModifiedTime(p).toMillis > StageDirReapAgeMs
            catch { case _: java.io.IOException => false }) // vanished concurrently
       }.forEach(deleteTree(_))
       finally siblings.close()
@@ -280,22 +280,21 @@ object RdrPipeline {
     val pm = warm.getOrElse {
       // phase 1: minRows = maxRows realizes the scarce-data override
       // (the explore sample only thins data the cap would drop anyway)
-      val phase1 = Trainer.step("load1")(Loader.load(spark, storeDir, model,
+      val phase1 = Loader.load(spark, storeDir, model,
         maxRows = maxRows, minRows = maxRows, sample = sample, seed = cfg.seed)
-        .withColumn(Schema.Model, lit(model)).persist())
+        .withColumn(Schema.Model, lit(model)).persist()
       try {
-        Trainer.step("tap1")(phaseTap(1, phase1))
+        phaseTap(1, phase1)
         val trained = Trainer.trainPropensity(phase1, cfg)
-        Trainer.step("ckptSave")(
-          ckptDir.foreach(d => ModelStore.saveCheckpoint(trained, d)))
+        ckptDir.foreach(d => ModelStore.saveCheckpoint(trained, d))
         trained
       } finally { phase1.unpersist(); () }
     }
-    val phase2 = Trainer.step("load2")(Loader.load(spark, storeDir, model,
+    val phase2 = Loader.load(spark, storeDir, model,
       maxRows = maxRows, sample = sample, seed = cfg.seed + 1)
-      .withColumn(Schema.Model, lit(model)).persist())
+      .withColumn(Schema.Model, lit(model)).persist()
     try {
-      Trainer.step("tap2")(phaseTap(2, phase2))
+      phaseTap(2, phase2)
       TrainedChain(pm, Trainer.trainDecision(phase2, pm, cfg), warm.isDefined)
     } finally { phase2.unpersist(); () }
   }
@@ -331,10 +330,9 @@ object RdrPipeline {
         try body finally timings(step) = (System.nanoTime() - t0) / 1e9
       }
       val ingested = timed("merge")(cachedMerged(spark, sfDir))
-      // Recompute staging: `ingested` is the materialized merged-cache
-      // parquet — already cheap re-runnable columnar input
-      timed("store_write")(PartitionStore.write(ingested, s"$stage/store", "events",
-        staging = PartitionStore.Staging.Recompute))
+      // `ingested` is the materialized merged-cache parquet — cheap
+      // re-runnable columnar input for write()'s two runs
+      timed("store_write")(PartitionStore.write(ingested, s"$stage/store", "events"))
       val cfg = Trainer.TrainConfig(
         maxFeatures = 20, pruneMinStringCount = 0, maxTrees = 5,
         propensityTrees = 5, treeDepth = 4, seed = 42L)
@@ -523,15 +521,11 @@ object RdrPipeline {
     // store + groom build in staging; the census below reads the
     // PUBLISHED slot the oracle SQL also reads (see buildSlot)
     val slot = GateArtifacts.buildSlot(sfDir, "store") { stage =>
-      val merged = graft.train.Trainer.step("store.merged")(
-        cachedMerged(spark, sfDir))
-      // Recompute staging: `merged` is the materialized merged-cache
-      // parquet — already cheap re-runnable columnar input
-      graft.train.Trainer.step("store.write")(
-        PartitionStore.write(merged, stage, "events",
-          staging = PartitionStore.Staging.Recompute))
-      graft.train.Trainer.step("store.groom")(
-        Groom.groom(spark, stage, "events"))
+      val merged = cachedMerged(spark, sfDir)
+      // `merged` is the materialized merged-cache parquet — cheap
+      // re-runnable columnar input for write()'s two runs
+      PartitionStore.write(merged, stage, "events")
+      Groom.groom(spark, stage, "events")
     }
     val keys = PartitionStore.listKeys(spark, slot, "events")
     Groom.assertNoOverlappingKeys(keys)

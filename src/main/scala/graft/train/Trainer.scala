@@ -101,30 +101,9 @@ object Trainer {
   private def fitPartitions(rows: Long): Int =
     math.max(8, math.min(64, (rows / 250000L).toInt + 1))
 
-  /** `SPARK_GRAFT_TRAIN_TIMINGS=1` prints per-stage wall times to
-    * stderr (and forces the encoded frame before the fit so encode
-    * and boosting cost separate) — the profiling surface for the
-    * train-step line in the bench; off by default, zero overhead.
-    */
-  private val timingsOn =
-    sys.env.get("SPARK_GRAFT_TRAIN_TIMINGS").contains("1")
-  private[graft] def step[A](name: String)(body: => A): A =
-    if (!timingsOn) body
-    else {
-      val t0 = System.nanoTime()
-      try body finally System.err.println(String.format(
-        java.util.Locale.ROOT, "[train-timing] %s %.2fs",
-        name, Double.box((System.nanoTime() - t0) / 1e9)))
-    }
-  private def forceIfTiming(df: DataFrame): DataFrame = {
-    if (timingsOn) { df.persist(); df.count() }
-    df
-  }
-
   /** Phase 1. `df` = rewarded decisions (item/context/sample/count). */
   def trainPropensity(df: DataFrame, config: TrainConfig = TrainConfig()): PropensityModel = {
-    val countRow = step("p1.countAgg")(
-      df.agg(avg(Schema.Count), count(lit(1))).collect().head)
+    val countRow = df.agg(avg(Schema.Count), count(lit(1))).collect().head
     require(!countRow.isNullAt(0),
       "trainPropensity: no training data (empty input or all-null counts)")
     val meanItemCount = countRow.getDouble(0)
@@ -137,33 +116,29 @@ object Trainer {
         map_concat(col("nums"), map(lit(TimestampFeature), col("_t"))))
       .persist()
 
-    val featureNames = step("p1.selectFeatures")(
-      Encoding.selectFeatures(flat, config.maxFeatures))
+    val featureNames = Encoding.selectFeatures(flat, config.maxFeatures)
     // no prior: propensity is memorization (propensities.py design note)
-    val tables = step("p1.stringTables")(
-      Encoding.buildStringTables(flat, featureNames, modelSeed,
-        priorMean = 0.0, priorCount = 0,
-        pruneMinCount = config.pruneMinStringCount,
-        maxStringsPerFeature = config.maxStringsPerFeature))
+    val tables = Encoding.buildStringTables(flat, featureNames, modelSeed,
+      priorMean = 0.0, priorCount = 0,
+      pruneMinCount = config.pruneMinStringCount,
+      maxStringsPerFeature = config.maxStringsPerFeature)
 
     // label metadata pins numClasses = 2: without it MLlib runs its
     // own discovery pass over the label column before boosting starts
     val labelMeta = org.apache.spark.ml.attribute.NominalAttribute
       .defaultAttr.withName("label").withNumValues(2).toMetadata()
-    val encoded = step("p1.encode")(forceIfTiming(
-      Encoding.withFeatureVector(flat, featureNames, tables, modelSeed)
-        .select(col(Schema.DecisionId), col("features"),
-          col(TargetCol).cast("double").as("label", labelMeta), col(WeightCol))
-        .repartition(fitPartitions(nRows))))
+    val encoded = Encoding.withFeatureVector(flat, featureNames, tables, modelSeed)
+      .select(col(Schema.DecisionId), col("features"),
+        col(TargetCol).cast("double").as("label", labelMeta), col(WeightCol))
+      .repartition(fitPartitions(nRows))
 
     val gbt = new GBTClassifier()
       .setMaxIter(config.propensityTrees)
       .setMaxDepth(config.treeDepth)
       .setWeightCol(WeightCol)
       .setSeed(modelSeed)
-    val model = step("p1.fit")(
-      fitWithValidation(gbt.fit, gbt.setValidationIndicatorCol _, encoded, config))
-    if (timingsOn) encoded.unpersist(blocking = false) // forceIfTiming's pin
+    val model =
+      fitWithValidation(gbt.fit, gbt.setValidationIndicatorCol _, encoded, config)
     flat.unpersist()
     PropensityModel(model, featureNames, tables, modelSeed, meanItemCount)
   }
@@ -191,9 +166,8 @@ object Trainer {
     if (config.binaryRewards)
       df = df.withColumn(Schema.Reward, when(col(Schema.Reward) > 0, 1.0).otherwise(0.0))
 
-    val stats = step("p2.statsAgg")(
-      df.agg(avg(Schema.Reward), stddev_samp(Schema.Reward),
-        count(lit(1))).collect().head)
+    val stats = df.agg(avg(Schema.Reward), stddev_samp(Schema.Reward),
+      count(lit(1))).collect().head
     require(!stats.isNullAt(0),
       "trainDecision: no training data (empty input or all-null rewards)")
     val rewardMean = stats.getDouble(0)
@@ -248,36 +222,30 @@ object Trainer {
 
     val featureNames = pm.selectedFeatures
     val priorMean = if (config.normalizeRewards) 0.0 else rewardMean
-    val tables = step("p2.stringTables")(
-      Encoding.buildStringTables(dropped, featureNames, modelSeed,
-        priorMean = priorMean, priorCount = config.rewardPriorCount,
-        pruneMinCount = config.pruneMinStringCount,
-        maxStringsPerFeature = config.maxStringsPerFeature))
+    val tables = Encoding.buildStringTables(dropped, featureNames, modelSeed,
+      priorMean = priorMean, priorCount = config.rewardPriorCount,
+      pruneMinCount = config.pruneMinStringCount,
+      maxStringsPerFeature = config.maxStringsPerFeature)
 
     // per-row population-id noise sprinkled over every feature
-    val encoded = step("p2.encode")(forceIfTiming(
-      Encoding.withFeatureVector(
-          dropped, featureNames, tables, modelSeed,
-          Some(hashUniform(col(Schema.DecisionId), modelSeed + 17)))
-        .select(col("features"), col(TargetCol).cast("double").as("label"), col(WeightCol))
-        .repartition(fitPartitions(nRows))))
+    val encoded = Encoding.withFeatureVector(
+        dropped, featureNames, tables, modelSeed,
+        Some(hashUniform(col(Schema.DecisionId), modelSeed + 17)))
+      .select(col("features"), col(TargetCol).cast("double").as("label"), col(WeightCol))
+      .repartition(fitPartitions(nRows))
 
     val gbt = new GBTRegressor()
       .setMaxIter(config.maxTrees)
       .setMaxDepth(config.treeDepth)
       .setWeightCol(WeightCol)
       .setSeed(modelSeed)
-    val model = step("p2.fit")(gbt.fit(encoded)) // no early stop in phase 2 (reference)
+    val model = gbt.fit(encoded) // no early stop in phase 2 (reference)
     // XGBoost4J probe: when the jars are on the classpath, also emit a
     // genuine native booster (same encoded frame, mapped params) so
     // reference consumers keep loading `.xgb` artifacts unchanged; on
     // the zero-egress classpath this is a no-op returning None
     val nativeBooster = Boosters.trainNativeBooster(
       encoded, Boosters.decisionParams(config, modelSeed))
-    // forceIfTiming's pin: released only AFTER the native-booster probe
-    // — unpersisting between the two fits would make timings mode
-    // re-evaluate the whole encode chain it exists to isolate
-    if (timingsOn) encoded.unpersist(blocking = false)
     dropped.unpersist() // the pinned frame (weighted is no longer persisted)
     // the stored (mean, std) are the Scorer's DE-normalization params:
     // identity when the target was trained raw, else predictions in

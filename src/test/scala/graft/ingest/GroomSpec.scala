@@ -222,6 +222,58 @@ class GroomSpec extends AnyFunSuite with SparkTestBase {
     Groom.assertNoOverlappingKeys(PartitionStore.listKeys(spark, dir, "m"))
   }
 
+  test("a failed group restores the caller's shuffle width only after its siblings stop") {
+    val dir = java.nio.file.Files.createTempDirectory("groom_width").toString
+    // two overlapping pairs far apart, 4000 rows each by name: the 10k
+    // adjacency budget splits them into two groups of one iteration.
+    // Empty files suffice — both compactions fail in the hook, before
+    // any file is read.
+    val keys = Seq(
+      key("20230705T000200Z", "20230705T000000Z", 4000),
+      key("20230705T000300Z", "20230705T000100Z", 4000),
+      key("20230705T200200Z", "20230705T200000Z", 4000),
+      key("20230705T200300Z", "20230705T200100Z", 4000))
+    keys.foreach { k =>
+      val f = new java.io.File(dir, k)
+      f.getParentFile.mkdirs()
+      f.createNewFile()
+    }
+    val groups = Groom.groupPartitionsToGroom(
+      PartitionStore.listKeys(spark, dir, "appconfig"))
+    assert(groups.size == 2, s"setup should produce 2 groups, got $groups")
+
+    // one group fails as soon as its sibling is running; the sibling
+    // records the session's shuffle width for ~2 s, then stops too
+    val width = "spark.sql.shuffle.partitions"
+    val first = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val siblingRunning = new java.util.concurrent.CountDownLatch(1)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    Groom.compactionStartHook = () => {
+      if (first.compareAndSet(true, false)) {
+        siblingRunning.await(1, java.util.concurrent.TimeUnit.MINUTES)
+        throw new IllegalStateException("planted group failure")
+      }
+      siblingRunning.countDown()
+      val until = System.nanoTime() + 2000000000L
+      while (System.nanoTime() < until) {
+        seen.add(spark.conf.get(width))
+        Thread.sleep(10)
+      }
+      throw new IllegalStateException("sibling stopped")
+    }
+    val callerWidth =
+      try graft.core.ConfScope.withConf(spark, width, "4") {
+        val e = intercept[IllegalStateException](Groom.groom(spark, dir, "appconfig"))
+        assert(e.getMessage == "planted group failure")
+        spark.conf.get(width)
+      } finally Groom.compactionStartHook = () => ()
+    val widths = seen.toArray.toSeq
+    assert(widths.size > 10, s"sibling polled only ${widths.size} times")
+    assert(widths.toSet == Set("2"),
+      s"sibling saw widths ${widths.distinct} while groom's scope was open")
+    assert(callerWidth == "4")
+  }
+
   test("a firehose batch landing MID-groom is neither lost nor double-merged") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("groom_race").toString

@@ -7,6 +7,8 @@ import graft.SparkTestBase
 import graft.core.Ksuid
 import graft.schema.{PartitionFilename, RewardedDecisionRow, Schema}
 
+import scala.jdk.CollectionConverters._
+
 class PartitionStoreSpec extends AnyFunSuite with SparkTestBase {
 
   private val base = 1660000000L // fixed, in the past
@@ -152,6 +154,38 @@ class PartitionStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(leftovers.isEmpty, leftovers.toString)
   }
 
+  test("input that changes between write's two runs throws and publishes nothing") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("pstore_nondet").toString
+    // an existing chunk the failed write must leave untouched
+    PartitionStore.write(syntheticRows(10, 10).toDF(), dir, "m")
+    def files() = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.map(root.relativize(_).toString).toSet
+      finally walk.close()
+    }
+    val keysBefore = PartitionStore.listKeys(spark, dir, "m")
+    val filesBefore = files()
+
+    // the filter keeps every even-numbered call of a JVM-wide counter:
+    // over 101 rows the census run (calls 1..101) keeps 50 and the
+    // write run (calls 102..202) keeps 51, whatever the task order
+    val src = java.nio.file.Files.createTempDirectory("pstore_nondet_src").toString
+    syntheticRows(101, 1000).toDF().write.mode("overwrite").parquet(src)
+    PartitionStoreSpec.calls.set(0)
+    val keepEven = udf { (_: String) =>
+      PartitionStoreSpec.calls.incrementAndGet() % 2 == 0
+    }.asNondeterministic()
+    val drifting = spark.read.parquet(src).filter(keepEven(col(Schema.DecisionId)))
+
+    val e = intercept[IllegalStateException](PartitionStore.write(drifting, dir, "m"))
+    assert(e.getMessage.contains("hold 51 rows") && e.getMessage.contains("counted 50"),
+      e.getMessage)
+    assert(PartitionStore.listKeys(spark, dir, "m") == keysBefore)
+    assert(files() == filesBefore)
+  }
+
   test("point lookup opens only the covering file(s), finds the row, misses cleanly") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("pstore3").toString
@@ -182,4 +216,9 @@ class PartitionStoreSpec extends AnyFunSuite with SparkTestBase {
     intercept[IllegalArgumentException](
       PartitionStore.lookupDecision(spark, dir, "m", "not-a-ksuid"))
   }
+}
+
+object PartitionStoreSpec {
+  /** Call counter for the nondeterministic filter (local mode: one JVM). */
+  val calls = new java.util.concurrent.atomic.AtomicLong(0)
 }
